@@ -11,17 +11,35 @@ object Fnv1a {
   final val Prime: Long = 16777619L
   final val Mask32: Long = 0xffffffffL
 
-  /** Full unsigned 32-bit FNV-1a of the UTF-8 bytes of `s`. */
+  /** Full unsigned 32-bit FNV-1a of the UTF-8 bytes of `s`, encoded on the
+    * fly: no byte array per key (the shuffle partitioner calls this once
+    * per emitted pair). Bit-identical to hashing `s.getBytes(UTF_8)`,
+    * including the `?` it writes for an unpaired surrogate.
+    */
   def hash32(s: String): Long = {
     var h = OffsetBasis
-    val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     var i = 0
-    while (i < bytes.length) {
-      h = ((h ^ (bytes(i) & 0xffL)) * Prime) & Mask32
+    while (i < s.length) {
+      val c = s.charAt(i)
       i += 1
+      if (c < 0x80) h = mix(h, c)
+      else if (c < 0x800) h = mix(mix(h, 0xc0 | (c >> 6)), 0x80 | (c & 0x3f))
+      else if (!Character.isSurrogate(c))
+        h = mix(mix(mix(h, 0xe0 | (c >> 12)), 0x80 | ((c >> 6) & 0x3f)),
+          0x80 | (c & 0x3f))
+      else if (Character.isHighSurrogate(c) && i < s.length &&
+          Character.isLowSurrogate(s.charAt(i))) {
+        val cp = Character.toCodePoint(c, s.charAt(i))
+        i += 1
+        h = mix(mix(mix(mix(h, 0xf0 | (cp >> 18)), 0x80 | ((cp >> 12) & 0x3f)),
+          0x80 | ((cp >> 6) & 0x3f)), 0x80 | (cp & 0x3f))
+      } else h = mix(h, '?')
     }
     h
   }
+
+  /** One FNV-1a step: fold byte `b` (low 8 bits) into `h`. */
+  @inline def mix(h: Long, b: Int): Long = ((h ^ (b & 0xffL)) * Prime) & Mask32
 
   /** The reference's `ihash`: FNV-1a masked to 31 bits (src/mr/worker.go:30-34). */
   def ihash(s: String): Int = (hash32(s) & 0x7fffffffL).toInt

@@ -32,13 +32,16 @@ case class Fnv1a32(child: Expression) extends UnaryExpression {
 }
 
 object Fnv1a32 {
-  /** Called from generated code: FNV-1a 32 over the UTF8String's bytes. */
+  /** Called from generated code: FNV-1a 32 over the UTF8String's bytes,
+    * read in place (`getBytes` copies whenever the string points into a
+    * row).
+    */
   def hashUtf8(s: UTF8String): Long = {
     var h = Fnv1a.OffsetBasis
-    val bytes = s.getBytes
+    val n = s.numBytes
     var i = 0
-    while (i < bytes.length) {
-      h = ((h ^ (bytes(i) & 0xffL)) * Fnv1a.Prime) & Fnv1a.Mask32
+    while (i < n) {
+      h = Fnv1a.mix(h, s.getByte(i))
       i += 1
     }
     h

@@ -1020,8 +1020,9 @@ object CorpusOps {
       "(src_snapshot_merge's deleteWhere) rewrites every file that " +
       "holds a matching row, so deleting one row from a 1 GB file " +
       "costs a 1 GB rewrite; Snapshots.deleteWhereDV instead commits " +
-      "ONLY a parquet of masked physical addresses (file, row_index " +
-      "from the scan's _metadata column) — O(matched rows) written, " +
+      "ONLY a parquet of masked physical addresses (file_name, a " +
+      "per-file constant, and row_index, both from the scan's " +
+      "_metadata column) — O(matched rows) written, " +
       "ZERO data files moved, fully distributed with no driver row " +
       "collect — and every reader applies the masks as one left-anti " +
       "join (AQE-broadcast while deletes are small; a DV-less version " +

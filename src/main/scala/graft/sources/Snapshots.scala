@@ -1124,12 +1124,16 @@ object Snapshots {
   /** Tag each scanned row with its physical address — file base name and
     * row index within the file — computed AT THE SCAN from the parquet
     * `_metadata` column (reliable under any later exchange, unlike
-    * `input_file_name()`).
+    * `input_file_name()`). The file is `_metadata.file_name`, a per-file
+    * constant the scan fills once per file, not a per-row decode and
+    * split of `file_path`. Staged names ([[stageFiles]]:
+    * `g<token>-part<NNNNN>.parquet`) need no URI escaping, so this is the
+    * same string a path split yields, and DV parquets written either way
+    * address the same rows.
     */
   private def withPos(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{col, element_at, split}
-    df.withColumn("_graft_file",
-        element_at(split(col("_metadata.file_path"), "/"), -1))
+    import org.apache.spark.sql.functions.col
+    df.withColumn("_graft_file", col("_metadata.file_name"))
       .withColumn("_graft_pos", col("_metadata.row_index"))
   }
 

@@ -17,7 +17,7 @@ import graft.engine.{KV, MRApp, MapReduce}
   */
 class CrashRecoverySpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
-  private val glob = "/root/reference/src/main/pg-*.txt"
+  private def glob = TestCorpus.glob
 
   test("map-side task crash on first attempt still matches the golden run") {
     val inner = AppRegistry("wc")
@@ -72,14 +72,15 @@ class CrashRecoverySpec extends AnyFunSuite {
 
 object CrashRecoverySpec {
   /** Crash exactly once per matching file across the job (executor-local
-    * map is enough: local mode shares the JVM).
+    * set is enough: local mode shares the JVM). `add` is true only for the
+    * first caller.
     */
-  val crashed = new ConcurrentHashMap[String, Boolean]()
+  val crashed: java.util.Set[String] = ConcurrentHashMap.newKeySet[String]()
   def shouldCrash(file: String): Boolean =
-    file.contains("sherlock") && crashed.putIfAbsent(file, true) == null
+    file.contains("sherlock") && crashed.add(file)
 
   /** Same once-only marker for the reduce stage, keyed by reduce key. */
-  val reduceCrashed = new ConcurrentHashMap[String, Boolean]()
+  val reduceCrashed: java.util.Set[String] = ConcurrentHashMap.newKeySet[String]()
   def shouldCrashReduce(key: String): Boolean =
-    key == "Sherlock" && reduceCrashed.putIfAbsent(key, true) == null
+    key == "Sherlock" && reduceCrashed.add(key)
 }

@@ -8,11 +8,12 @@ import graft.engine.MapReduce
 /** The reference's golden differential methodology (src/main/test-mr.sh:
   * 80-111): run each portable app distributed, compare the globally sorted
   * `"key value"` lines against the independent single-process sequential
-  * oracle over the same Project Gutenberg corpus.
+  * oracle over the same corpus ([[TestCorpus]]: eight generated `pg-*.txt`
+  * files standing in for the reference's Project Gutenberg books).
   */
 class MapReduceGoldenSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
-  private val glob = "/root/reference/src/main/pg-*.txt"
+  private def glob = TestCorpus.glob
 
   private def distributedSorted(app: String, nReduce: Int): Seq[String] =
     MapReduce.run(spark, AppRegistry(app), glob, nReduce)
@@ -55,24 +56,27 @@ class MapReduceGoldenSpec extends AnyFunSuite {
   }
 
   test("wc: known corpus total word count") {
-    // ~608,645 words per BASELINE.md; lock the exact tokenizer-dependent sum.
+    // The exact tokenizer-dependent sum over TestCorpus's generated text.
     val total = MapReduce.run(spark, AppRegistry("wc"), glob, 10)
       .map(_._2.toLong).sum()
-    assert(total > 500000 && total < 700000, s"suspicious total $total")
+    assert(total == 254964L, s"corpus total $total")
   }
 
   /** Committed golden digests over the pg corpus — guards BOTH
     * implementations drifting together (the sorted-output md5 was locked
-    * when distributed and sequential first byte-matched).
+    * when distributed and sequential first byte-matched). The corpus
+    * directory is a fresh temp dir per run, so `indexer`'s document paths
+    * are hashed relative to it.
     */
   test("golden digests: wc and indexer sorted output md5") {
+    val prefix = TestCorpus.dir.toString + "/"
     def md5(lines: Seq[String]): String = {
       val d = java.security.MessageDigest.getInstance("MD5")
-      d.update(lines.mkString("", "\n", "\n")
+      d.update(lines.map(_.replace(prefix, "")).mkString("", "\n", "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       d.digest().map("%02x".format(_)).mkString
     }
-    assert(md5(sequentialSorted("wc")) == "cac7f68803d98a28eb877afad90e8cc3")
-    assert(md5(sequentialSorted("indexer")) == "5acee18b1101e5f2efa76c61ba82f020")
+    assert(md5(sequentialSorted("wc")) == "ebc02103d7c016f0697a4f46796928eb")
+    assert(md5(sequentialSorted("indexer")) == "aaacd562d1de773b3ac8bc328da9040e")
   }
 }

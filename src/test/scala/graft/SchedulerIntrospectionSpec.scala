@@ -20,11 +20,11 @@ import graft.engine.MapReduce
   *     (one successful attempt, attempt number 0 — no re-execution, no
   *     double-counting), and with the split cap below the smallest file the
   *     map stage has exactly one task per input file (the reference's
-  *     8-map-executions check over the same pg corpus).
+  *     8-map-executions check, here over [[TestCorpus]]'s eight files).
   */
 class SchedulerIntrospectionSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
-  private val glob = "/root/reference/src/main/pg-*.txt"
+  private def glob = TestCorpus.glob
 
   private case class TaskRec(stageId: Int, partition: Int, attempt: Int,
       launch: Long, finish: Long, ok: Boolean)
@@ -75,8 +75,9 @@ class SchedulerIntrospectionSpec extends AnyFunSuite {
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "scheduler introspection golden run")
-      // minMapTasks=24 puts the combine-split cap (3.3MB/24 ≈ 137KB) below
-      // the smallest pg file (139KB): exactly one map task per file.
+      // minMapTasks=24 puts the combine-split cap (total/24, about 4% of
+      // the corpus) below the smallest file (about 7%): exactly one map
+      // task per file.
       val out = MapReduce
         .run(spark, AppRegistry("wc"), glob, nReduce = 10, minMapTasks = 24)
         .collect()

@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{ElementAt, StringSplit}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,9 +30,12 @@ import graft.sources.Snapshots
   *  - RESTORE republishes a retained version's exact state (files,
   *    schema, DVs, constraints) as a new commit, history intact;
   *  - vacuum treats DV parquets as manifest-referenced files: retained
-  *    versions keep their masks, expired ones fail loudly.
+  *    versions keep their masks, expired ones fail loudly;
+  *  - a DV's `file` values are the table's data-file names whatever the
+  *    table's path, and the scan takes them from the per-file
+  *    `_metadata.file_name`, never from a per-row split of the path.
   */
-class SnapshotsDvSpec extends AnyFunSuite {
+class SnapshotsDvSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestBase.spark
   private val dir = "/root/testdata/sf0.01"
 
@@ -284,5 +290,119 @@ class SnapshotsDvSpec extends AnyFunSuite {
     Snapshots.optimize(spark, table, 1024L * 1024 * 1024)              // v5
     assert(Snapshots.rowCount(table).contains(92L))
     assert(Snapshots.read(spark, table).mcount() == 92)
+  }
+
+  /** (doc_id, lang, n_chars) rows of `df`, the model's element type. */
+  private type Doc = (Long, String, Long)
+  private def rows(df: DataFrame): Set[Doc] =
+    df.select(col("doc_id"), col("lang"), col("n_chars")).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+
+  test("DV addressing under a table path with spaces: delete_dv, merge, " +
+      "append, delete_dv, optimize; every read path matches a model") {
+    val table = Files.createTempDirectory("graft dv addr ").toString
+    assert(table.contains(" "))
+    // The model: the table's rows by key after every version.
+    var model: Map[Long, Doc] = rows(docs).map(d => d._1 -> d).toMap
+    val models = scala.collection.mutable.Map[Int, Set[Doc]]()
+
+    // Point probes of every kind: masked by the first delete, updated and
+    // inserted by the merge, re-inserted over a masked key, appended,
+    // masked by the second delete (in a merge-written and an appended
+    // file), and untouched.
+    val probes = Seq(13L, 105L, 1000007L, 203L, 2000011L, 1000057L,
+      2000111L, 17L, 250L)
+    def check(v: Int): Unit = {
+      val want = model.values.toSet
+      models(v) = want
+      assert(rows(Snapshots.read(spark, table, Some(v))) == want, s"read v$v")
+      for (k <- probes)
+        assert(rows(Snapshots.readPoint(spark, table, "doc_id", k, Some(v))) ==
+          want.filter(_._1 == k), s"readPoint($k) v$v")
+      for ((lo, hi) <- Seq((100L, 260L), (999000L, 3000000L)))
+        assert(rows(Snapshots.readRange(spark, table, "doc_id", lo, hi,
+          Some(v))) == want.filter(d => d._1 >= lo && d._1 <= hi),
+          s"readRange($lo, $hi) v$v")
+      if (v > 1) {
+        val feed = Snapshots.changesBetween(spark, table, v - 1, Some(v))
+        def kind(t: String) = rows(feed.filter(col("_change_type") === t))
+        assert(kind("insert") == want -- models(v - 1), s"feed inserts v$v")
+        assert(kind("delete") == models(v - 1) -- want, s"feed deletes v$v")
+      }
+    }
+
+    Snapshots.publish(docs.repartitionByRange(4, col("doc_id")), table)
+    check(1)
+    check(Snapshots.addBloomIndex(table, "doc_id"))
+
+    val v3 = Snapshots.deleteWhereDV(spark, table, col("doc_id") % 10 === 3)
+    model = model.filter(_._1 % 10 != 3)
+    check(v3)
+
+    // Merge: update keys % 50 == 5, insert new keys, re-insert masked keys
+    // % 100 == 3 (a masked key's row must come back as the merged one).
+    val delta = docs.filter(col("doc_id") % 50 === 5 ||
+        col("doc_id") % 50 === 7 || col("doc_id") % 100 === 3)
+      .withColumn("doc_id", col("doc_id") + lit(1000000L) *
+        (col("doc_id") % 50 === 7).cast("long"))
+      .withColumn("n_chars", col("n_chars") + 1000L)
+    val v4 = Snapshots.merge(spark, table, delta, "doc_id")
+    model ++= rows(delta).map(d => d._1 -> d)
+    check(v4)
+
+    val extra = docs.filter(col("doc_id") % 100 === 11)
+      .withColumn("doc_id", col("doc_id") + 2000000L)
+    val v5 = Snapshots.append(extra, table)
+    model ++= rows(extra).map(d => d._1 -> d)
+    check(v5)
+
+    // The second delete masks rows in merge-written and appended files.
+    val v6 = Snapshots.deleteWhereDV(spark, table,
+      col("doc_id") % 50 === 7 || col("doc_id") === 2000111L ||
+        col("doc_id") === 17L)
+    model = model.filter { case (k, _) =>
+      k % 50 != 7 && k != 2000111L && k != 17L }
+    check(v6)
+
+    val sizes = arrOf(table, v6, "files")
+      .map(n => Files.size(Paths.get(table, "data", n)))
+    val v7 = Snapshots.optimize(spark, table, sizes.max)
+    assert(v7 == v6 + 1, "optimize must pack the small files")
+    check(v7)
+
+    // Every `file` in every committed DV parquet is a data-file name of
+    // the table: a staged name, listed by a manifest, present on disk.
+    val staged = "g[0-9a-f]{8}-part[0-9]{5}\\.parquet".r
+    val dataNames = (1 to v7).flatMap(v => arrOf(table, v, "files")).toSet
+    val dvNames = (1 to v7).flatMap(v => arrOf(table, v, "dvs")).distinct
+    assert(dvNames.size >= 2)
+    for (n <- dvNames) {
+      val files = spark.read.parquet(Paths.get(table, "data", n).toString)
+        .select(col("file")).distinct().collect().map(_.getString(0))
+      assert(files.nonEmpty, s"DV $n masks nothing")
+      for (f <- files) {
+        assert(staged.matches(f), s"DV $n: '$f' is not a staged file name")
+        assert(dataNames.contains(f) &&
+          Files.exists(Paths.get(table, "data", f)),
+          s"DV $n: '$f' is not a data file of the table")
+      }
+    }
+  }
+
+  test("a DV-applied read takes the file from _metadata.file_name: no " +
+      "per-row split of the path in its executed plan") {
+    val table = Files.createTempDirectory("graft_dv_plan").toString
+    Snapshots.publish(docs.repartitionByRange(4, col("doc_id")), table)
+    Snapshots.deleteWhereDV(spark, table, col("doc_id") % 10 === 3)
+    val df = Snapshots.read(spark, table)
+    assert(ids(df) == ids(docs.filter(col("doc_id") % 10 =!= 3)))
+    val plan = df.queryExecution.executedPlan
+    // The read is DV-applied: the masks join in, and the data scan reads
+    // the `_metadata` file name.
+    assert(plan.toString.contains("LeftAnti"), s"no anti-join:\n$plan")
+    assert(plan.toString.contains("file_name"), s"no file_name:\n$plan")
+    val splits = collect(plan) { case p => p }.flatMap(_.expressions)
+      .flatMap(_.collect { case e: StringSplit => e; case e: ElementAt => e })
+    assert(splits.isEmpty, s"per-row path split in the DV read:\n$plan")
   }
 }
